@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -15,26 +14,12 @@ object Bench {
     // every query's generated code and faults in the page cache before
     // anything is timed, so measured passes see a warm JVM regardless
     // of suite order.
-    // hygiene after every execution: clearCache() drops CacheManager
-    // entries, and localCheckpoint blocks (dsir, BPE — registered as
-    // persistent RDDs, reclaimed otherwise only after a driver GC)
-    // are unpersisted explicitly so storage pressure never bleeds
-    // into the next measurement (r14 review).
-    // CONTRACT (ADVICE r14 #5): this unpersists EVERY persistent RDD
-    // in the context, so no gate query may deliberately cache state
-    // for reuse across interleaved bench passes — each invocation
-    // must be self-contained (true of all 270+ today: localCheckpoints
-    // are per-invocation scaffolding). A future cross-pass cache would
-    // be silently evicted here and must instead persist to the
-    // warehouse (the materializeStar/materializeStemDict pattern).
-    def dropStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    // hygiene after every execution: queries that cache tables or
+    // checkpoint must not bleed storage/GC pressure into later
+    // measurements
     for ((name, fn) <- ordered) {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      dropStorage()
+      Harness.dropStorage(spark)
     }
     // Min + median of three INTERLEAVED measured passes (not three
     // consecutive runs per query): a multi-second machine stall spans
@@ -42,38 +27,23 @@ object Bench {
     // (BENCH_r05's q12-q15 block), but it cannot span the same query
     // in three suite-wide passes minutes apart. Min absorbs ±JIT/GC
     // noise; median is robust to one lucky sample.
-    // Noise canary (VERDICT r8 "What's wrong" #2): identical code
-    // measured twice in round 8 swung the suite total ~1.35x purely
-    // from sandbox load, and nothing in the JSON let a reader tell
-    // that from a regression. A fixed-cost, data-independent
-    // calibration kernel — sum(xxhash64) over a 128M range, pure
-    // codegen CPU, no IO, no shuffle — is timed once per measured
-    // pass; its min lands in the JSON as canary_s. Cross-round
-    // comparisons divide by the canary ratio to normalize out machine
-    // load (BENCH_NOTES.md).
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      // bit_xor, not sum: summing 128M 64-bit hashes overflows Long
-      // under ANSI mode
-      spark.range(0L, 134217728L, 1L, 32)
-        .selectExpr("bit_xor(xxhash64(id)) AS h").head()
-      (System.nanoTime() - t0) / 1e9
-    }
-    canaryOnce() // unmeasured warm-up, same as the suite
+    // Noise canary: identical code measured twice swung the suite total
+    // ~1.35x purely from sandbox load, so the load canary
+    // (Harness.canaryOnce) is timed once per measured pass and its min
+    // lands in the JSON as canary_s. Cross-round comparisons divide by
+    // the canary ratio to normalize out machine load (BENCH_NOTES.md).
+    Harness.canaryOnce(spark) // unmeasured warm-up, same as the suite
     val canarySamples = scala.collection.mutable.ListBuffer.empty[Double]
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val failed = scala.collection.mutable.Set.empty[String]
     for (_ <- 1 to 3) {
-      canarySamples += canaryOnce()
+      canarySamples += Harness.canaryOnce(spark)
       for ((name, fn) <- ordered) {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
           catch { case _: Throwable => false }
         val d = (System.nanoTime() - t0) / 1e9
-        // bench hygiene: queries that CACHE tables, checkpoint, or
-        // register views must not bleed storage/GC pressure into
-        // later measurements
-        dropStorage()
+        Harness.dropStorage(spark)
         // a fast-failing query must not record its (tiny) elapsed time
         // as a legitimate sample and deflate the total — flag it instead
         if (ok) samples(name) = d :: samples.getOrElse(name, Nil)

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.{Clustering, FixpointStats}
+
 /** Scale-out probe (VERDICT r3 next-round #3): the driver testdata
   * tops out at sf0.1, so derive a REPLICAS× scale-up of the
   * documents/embeddings corpora and run the scale-path queries against
@@ -143,7 +145,7 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$scaleDir/embeddings.parquet")
     }
 
-    def probeSet(names: Seq[String])(dir: String): Seq[(String, Double, Long, Option[(Int, Boolean, Long, Long)])] =
+    def probeSet(names: Seq[String])(dir: String): Seq[(String, Double, Long, Option[FixpointStats])] =
       names.map { name =>
         // min of two samples: a single-sample probe is defenceless
         // against a multi-second machine stall (observed live in r13 —
@@ -170,29 +172,19 @@ object ScaleProbe {
               System.err.println(s"[scale-probe] $name FAILED: $e")
           }
           val s = (System.nanoTime() - t0) / 1e9
-          // bench hygiene (same as Bench): queries that materialize
-          // intermediates (the dedup fixpoints) must not bleed storage
-          // pressure into the next sample or probe. clearCache() only
-          // drops CacheManager entries; localCheckpoint blocks (dsir,
-          // BPE) are registered as persistent RDDs and must be
-          // unpersisted explicitly — waiting for the ContextCleaner
-          // needs a driver GC that may never come mid-probe (r14
-          // review)
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          // storage hygiene (same as Bench): queries that materialize
+          // intermediates must not bleed storage pressure into the next
+          // sample or probe
+          Harness.dropStorage(spark)
           s
         }
         val sec = secs.min
-        val fix = if (FixpointQueries(name))
-          Some((graft.queries.Clustering.lastRounds,
-            graft.queries.Clustering.lastConverged,
-            graft.queries.Clustering.lastEdgeRows,
-            graft.queries.Clustering.lastContractedEdgeRows))
-        else None
+        val fix =
+          if (FixpointQueries(name)) Some(Clustering.lastStats) else None
         System.err.println(f"[scale-probe] $dir $name: $sec%.2f s, $rows rows" +
-          fix.map { case (r, c, e, ce) =>
-            s", fixpoint rounds=$r converged=$c edges=$e contracted=$ce" }
+          fix.map { f =>
+            s", fixpoint rounds=${f.rounds} converged=${f.converged} " +
+              s"edges=${f.edgeRows} contracted=${f.contractedEdgeRows}" }
             .getOrElse(""))
         (name, sec, rows, fix)
       }
@@ -210,41 +202,19 @@ object ScaleProbe {
         Some((hb, hs))
       } else None
 
-    def fmt(rs: Seq[(String, Double, Long, Option[(Int, Boolean, Long, Long)])]): String =
+    def fmt(rs: Seq[(String, Double, Long, Option[FixpointStats])]): String =
       rs.map { case (n, s, rows, fix) =>
-        // edge_rows vs contracted_edge_rows: the r20 label-graph
+        // edge_rows vs contracted_edge_rows: the label-graph
         // contraction's scale evidence — tail rounds iterate on the
         // contracted cluster graph, whose row count this records
-        val fixJson = fix.map { case (r, c, e, ce) =>
-          s""","fixpoint_rounds":$r,"converged":$c,"edge_rows":$e,"contracted_edge_rows":$ce""" }.getOrElse("")
+        val fixJson = fix.map { f =>
+          s""","fixpoint_rounds":${f.rounds},"converged":${f.converged},"edge_rows":${f.edgeRows},"contracted_edge_rows":${f.contractedEdgeRows}""" }.getOrElse("")
         f""""$n":{"sec":$s%.3f,"rows":$rows$fixJson}"""
       }.mkString("{", ",", "}")
 
     val ratios = base.zip(scaled).map { case ((n, b, _, _), (_, sc, _, _)) =>
       f""""$n":${sc / math.max(b, 1e-9)}%.2f"""
     }.mkString("{", ",", "}")
-
-    // checkpoint-path leg (r17; VERDICT r16 next #7): the deepest
-    // fixpoints re-run at the SCALED dir with lineage truncation on —
-    // CheckpointConf is spec-asserted result-equal, and this records
-    // whether truncation costs more than it saves at depth-13
-    // fixpoints (same warm-min methodology, directly comparable to
-    // the scaled entries above)
-    val ckptNames = Seq("dedup_minhash_lsh_full", "pipeline_leakage_split")
-    val prevCkpt = spark.conf
-      .getOption(graft.queries.Clustering.CheckpointConf)
-    spark.conf.set(graft.queries.Clustering.CheckpointConf, "true")
-    // restore the prior conf even if a ckpt probe throws — a leaked
-    // "true" would silently change every later query in this session
-    // (ADVICE r17)
-    val ckpt =
-      try probeSet(ckptNames)(scaleDir)
-      finally prevCkpt match {
-        case Some(v) =>
-          spark.conf.set(graft.queries.Clustering.CheckpointConf, v)
-        case None =>
-          spark.conf.unset(graft.queries.Clustering.CheckpointConf)
-      }
 
     val heavyJson = heavy.map { case (hb, hs) =>
       val hr = hb.zip(hs).map { case ((n, b, _, _), (_, sc, _, _)) =>
@@ -257,7 +227,6 @@ object ScaleProbe {
     val json =
       s"""{"probe":"scale${replicas}x","src":"$srcDir","replicas":$replicas,""" +
         s""""base":${fmt(base)},"scaled":${fmt(scaled)},""" +
-        s""""checkpoint_scaled":${fmt(ckpt)},""" +
         s""""time_ratio":$ratios$heavyJson}"""
     Files.writeString(Paths.get(s"SCALE_PROBE_${replicas}x.json"), json + "\n")
     println(json)

@@ -1,8 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+/** What one [[Clustering.propagateToFixpoint]] call did: propagation
+  * rounds run, whether the label sum stopped moving before `maxIters`,
+  * and the rows of the input edge table vs the contracted cluster graph
+  * the tail rounds iterate on. */
+final case class FixpointStats(rounds: Int, converged: Boolean,
+    edgeRows: Long, contractedEdgeRows: Long)
 
 /** Connected components over a bipartite (id, bucket) edge list by
   * min-label propagation — the clustering stage shared by the LSH dedup
@@ -20,10 +26,16 @@ import org.apache.spark.storage.StorageLevel
   * are shallow in practice; `maxIters` is a safety valve).
   *
   * Reference semantics: presto-ads has no clustering operator — this is
-  * the dedup completion the 100 TB pipeline needs (VERDICT r2 §3).
-  * At cluster scale each round's result is checkpointed to truncate
-  * lineage — enabled by the [[CheckpointConf]] session conf (r16);
-  * locally persist() is enough for ≤maxIters rounds and stays default.
+  * the dedup completion the 100 TB pipeline needs.
+  *
+  * Every intermediate is materialized by an eager `localCheckpoint()`:
+  * a flat LogicalRDD leaf that truncates lineage, so round r's plan
+  * never chains back through rounds 1..r-1 and no action re-plans
+  * earlier rounds. The blocks live on executors (no fault tolerance
+  * across executor loss) and stay until the caller's storage hygiene
+  * ([[graft.Harness.dropStorage]]) or the ContextCleaner releases them.
+  * The call keeps no state beyond [[lastStats]], so concurrent calls in
+  * one session are independent.
   */
 object Clustering {
 
@@ -44,149 +56,93 @@ object Clustering {
     (1 to rounds).foldLeft(init)((l, _) => propagateRound(edges, l))
   }
 
-  // the returned labels frame must stay persisted while the caller's
-  // downstream aggregates run (unpersisting immediately would replay
-  // every round); releasing it on the NEXT fixpoint call bounds the
-  // leak to one cached frame per session instead of one per query run
-  private var lastCaches: List[DataFrame] = Nil
+  @volatile private var stats = FixpointStats(0, converged = false, 0L, 0L)
 
-  // observability for scale probes (VERDICT r3 #3): round count and
-  // convergence of the most recent fixpoint, mirrored from the stderr
-  // line so harness code can record them without log scraping
-  @volatile var lastRounds: Int = 0
-  @volatile var lastConverged: Boolean = false
-  // contraction observability (r20; VERDICT r19 next #4's "done"
-  // metric): edge rows entering the fixpoint vs rows of the contracted
-  // cluster graph the tail rounds actually iterate on
-  @volatile var lastEdgeRows: Long = 0L
-  @volatile var lastContractedEdgeRows: Long = 0L
+  /** Statistics of the most recent fixpoint call to finish iterating,
+    * published as one value so a reader never mixes fields of two
+    * calls; the scale probes record them without log scraping. */
+  def lastStats: FixpointStats = stats
 
-  /** Conf flag (r16; VERDICT r15 next #7): when true (the DEFAULT
-    * since r20), each fixpoint materialization localCheckpoints
-    * (eager, flat LogicalRDD leaf) instead of persisting, TRUNCATING
-    * lineage so round r's plan never chains back through rounds
-    * 1..r-1.
-    *
-    * r20 flipped the default after profiling (ProfileFixpoint,
-    * sf0.1): a persist() wraps the round in an InMemoryRelation whose
-    * plan EMBEDS the full child tree, so each later action re-plans
-    * an adaptive plan nested one level deeper per materialization —
-    * measured 1.5-4.6 s of pure driver planning per action by round
-    * 5+ (32 cores, ≤30k rows!), vs 0.04-0.16 s with flat checkpoint
-    * leaves. The r16 "persist is cheaper locally" measurement
-    * predates the r19 cached-edge layers that deepened the nesting.
-    * localCheckpoint trades fault-tolerance for speed (blocks live on
-    * executors); a deployment that must survive executor loss sets
-    * the conf to false (persist path) or swaps in reliable
-    * checkpoint() via spark.checkpoint.dir. */
-  val CheckpointConf = "spark.graft.clustering.checkpoint"
-
-  /** Eagerly materialize a round: localCheckpoint already runs the
-    * plan (via withAction, so observe() metrics on `df` fire during
-    * it — a separate count() would be a second job per round and,
-    * on the checkpointed frame, could never fire them anyway: the
-    * CollectMetrics node is gone from the flat leaf); the persist
-    * branch still needs the explicit count. */
-  private def roundMaterialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption(CheckpointConf)
-        .forall(_.toBoolean))
-      df.localCheckpoint(eager = true)
-    else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
+  /** `df` with a Long `metric` observed over its rows. The value is
+    * read after the next action that runs `df` — here always the eager
+    * localCheckpoint that materializes it — so it costs no job. */
+  private def observing(df: DataFrame,
+      metric: Column): (DataFrame, () => Long) = {
+    val obs = new Observation
+    (df.observe(obs, metric.as("v")), () => obs.get("v").asInstanceOf[Long])
+  }
 
   /** Iterate propagation until the label assignment is stable.
     * Returns (id, cluster) with cluster = component-minimum id.
     *
-    * `requireConverged` (r17; ADVICE r16 #1): when true, hitting the
-    * maxIters valve with the label sum still moving THROWS instead of
-    * returning the non-converged assignment. pipeline_leakage_split
-    * sets it — a silently unconverged clustering there could put
-    * near-dup docs in different splits, the exact leakage the query
-    * exists to prevent, with no error raised. Dedup callers keep the
-    * default: an early-cut clustering merely under-merges (keeps an
-    * extra survivor), which degrades recall, not correctness of the
-    * guarantee the operator advertises.
-    *
-    * Synchronized for its WHOLE duration (ADVICE r3): two concurrent
-    * fixpoints would otherwise race on [[lastLabels]] between the
-    * release of the previous cache and the publish of the new one.
-    * Serializing concurrent fixpoints is acceptable — the engine's
-    * query harnesses run queries sequentially, and the iterative jobs
-    * inside would contend for the same executors anyway. */
+    * `requireConverged`: when true, hitting the maxIters valve with the
+    * label sum still moving THROWS instead of returning the
+    * non-converged assignment. pipeline_leakage_split sets it — a
+    * silently unconverged clustering there could put near-dup docs in
+    * different splits, the exact leakage the query exists to prevent,
+    * with no error raised. Dedup callers keep the default: an early-cut
+    * clustering merely under-merges (keeps an extra survivor), which
+    * degrades recall, not correctness of the guarantee the operator
+    * advertises. */
   def propagateToFixpoint(edges: DataFrame, maxIters: Int = 10,
-      requireConverged: Boolean = false): DataFrame = synchronized {
+      requireConverged: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    lastCaches.foreach(_.unpersist())
-    lastCaches = Nil
-    // Optimization r19 (guide §2.4 — two operations keyed the same way
-    // share one exchange): the edge table is hash-partitioned ONCE on
-    // each of its two join keys and cached, so no fixpoint round ever
-    // re-shuffles it — each round's two joins run exchange-free on the
-    // edge side and only the label-sized aggregate streams move. The
-    // SHUFFLE_HASH hint on the label side pins the strategy: without
-    // it the planner broadcasts the (locally tiny) label frame every
-    // round — a per-round driver collect + broadcast build that is
-    // pure latency here and a non-starter at cluster scale where
-    // labels are corpus-sized (one row per doc).
-    // Edge caches and every round's labels go through roundMaterialize
-    // (r20): under the default checkpoint mode each is a FLAT
-    // LogicalRDD leaf that keeps its hash partitioning, so rounds stay
-    // exchange-free on the edge side without the nested-InMemoryRelation
-    // replanning cost persist() was paying per action (see
-    // CheckpointConf). unpersist() on a checkpointed frame is a no-op;
-    // blocks are bounded per invocation and released by the harnesses'
-    // dropStorage (persist mode keeps the explicit releases).
+    // The edge table is repartitioned on each of its two join keys and
+    // checkpointed once per key. Under AQE the checkpoint's LogicalRDD
+    // does not carry that hash partitioning (the adaptive plan reports
+    // UnknownPartitioning, wherever the observe sits), so each round's
+    // joins still exchange the edge side. The SHUFFLE_HASH hint on the
+    // label side pins the strategy: without it the planner broadcasts
+    // the (locally tiny) label frame every round — a per-round driver
+    // collect + broadcast build that is pure latency here and a
+    // non-starter at cluster scale where labels are corpus-sized.
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val eById = roundMaterialize(edges.select($"id", $"bucket")
-      .repartition(nParts, $"id"))
-    val eByBucket = roundMaterialize(eById.repartition(nParts, $"bucket"))
+    val (edgesObs, edgeRows) =
+      observing(edges.select($"id", $"bucket"), count(lit(1)))
+    val eById = edgesObs.repartition(nParts, $"id").localCheckpoint()
+    val eByBucket = eById.repartition(nParts, $"bucket").localCheckpoint()
     def round(labels: DataFrame): DataFrame = {
       val bucketMin = eById.join(labels.hint("shuffle_hash"), "id")
         .groupBy("bucket").agg(min("cluster").as("bmin"))
       eByBucket.join(bucketMin.hint("shuffle_hash"), "bucket")
         .groupBy("id").agg(min("bmin").as("cluster"))
     }
-    // round 1 folded into initialization: with cluster(id)=id the
-    // bucket minimum is just min(id) per bucket — no labels join yet
-    // (and on the bucket-partitioned cache the aggregate + join are
-    // exchange-free: only the final groupBy(id) moves data)
+    // the convergence sum rides the materializing action as an observed
+    // metric — one job materializes the round AND yields the sum
     def sumOnce(df: DataFrame): (DataFrame, Long) = {
-      // convergence sum rides the materializing action as an observed
-      // metric — one job materializes the round AND yields the sum
-      val obs = new org.apache.spark.sql.Observation
-      val m = roundMaterialize(df.observe(obs, sum($"cluster").as("s")))
-      (m, obs.get("s").asInstanceOf[Long])
+      val (obs, s) = observing(df, sum($"cluster"))
+      val m = obs.localCheckpoint()
+      (m, s())
     }
-    // the FIRST action runs three rounds (the folded init + one double
+    // Round 1 is folded into initialization: with cluster(id)=id the
+    // bucket minimum is just min(id) per bucket — no labels join yet.
+    // The FIRST action runs three rounds (the folded init + one double
     // round): measured components converge in 5-7 rounds, so a deeper
-    // first plan saves one whole action — the per-action latency
-    // (stage scheduling + cache materialization + convergence check)
-    // is the fixpoint's floor, locally and on a cluster
+    // first plan saves one whole action — the per-action latency (stage
+    // scheduling + checkpoint + convergence check) is the fixpoint's
+    // floor, locally and on a cluster.
     val (labels, _) = sumOnce(round(round(eByBucket.join(
         eByBucket.groupBy($"bucket").agg(min($"id").as("bmin"))
           .hint("shuffle_hash"), "bucket")
       .groupBy($"id").agg(min($"bmin").as("cluster")))))
-    // --- label-graph contraction (optimization r20; VERDICT r19 next
-    // #4, guide §2.3 "shuffle keys and metadata instead of payloads"):
-    // the first action collapses every star, so the remaining rounds
-    // only need the CLUSTER graph — each edge projected to
-    // (cluster(id), bucket) and deduped. Components are preserved (two
-    // ids sharing a bucket implies their cluster labels share it), and
-    // every label value is itself an original id with cluster(M) = M
-    // for a component minimum M, so the contracted fixpoint's minima
-    // ARE the original components' minima. Per-round shuffle bytes
-    // drop from O(|edges|) to O(|cluster graph|), which shrinks as
-    // merging proceeds — at scale the tail rounds iterate on
-    // ~|components| rows instead of the corpus (lastContractedEdgeRows
-    // vs lastEdgeRows records the ratio for the scale probes).
-    val cEdges = eById.join(labels.hint("shuffle_hash"), "id")
-      .select($"cluster".as("id"), $"bucket").distinct()
-    val cById = roundMaterialize(cEdges.repartition(nParts, $"id"))
-    val cByBucket = roundMaterialize(cById.repartition(nParts, $"bucket"))
+    // Label-graph contraction: the first action collapses every star,
+    // so the remaining rounds only need the CLUSTER graph — each edge
+    // projected to (cluster(id), bucket) and deduped. Components are
+    // preserved (two ids sharing a bucket implies their cluster labels
+    // share it), and every label value is itself an original id with
+    // cluster(M) = M for a component minimum M, so the contracted
+    // fixpoint's minima ARE the original components' minima. Per-round
+    // shuffle bytes drop from O(|edges|) to O(|cluster graph|), which
+    // shrinks as merging proceeds — at scale the tail rounds iterate on
+    // ~|components| rows instead of the corpus (contractedEdgeRows vs
+    // edgeRows in [[FixpointStats]] records the ratio).
+    val (cEdges, contractedEdgeRows) = observing(
+      eById.join(labels.hint("shuffle_hash"), "id")
+        .select($"cluster".as("id"), $"bucket").distinct(),
+      count(lit(1)))
+    val cById = cEdges.repartition(nParts, $"id").localCheckpoint()
+    val cByBucket = cById.repartition(nParts, $"bucket").localCheckpoint()
     def cRound(ls: DataFrame): DataFrame = {
       val bucketMin = cById.join(ls.hint("shuffle_hash"), "id")
         .groupBy("bucket").agg(min("cluster").as("bmin"))
@@ -198,61 +154,40 @@ object Clustering {
         cByBucket.groupBy($"bucket").agg(min($"id").as("bmin"))
           .hint("shuffle_hash"), "bucket")
       .groupBy($"id").agg(min($"bmin").as("cluster")))))
-    // contraction sizes for the scale probes (counts ride the frames
-    // already materialized by the actions above — cById is cached)
-    lastEdgeRows = eById.count()
-    lastContractedEdgeRows = cById.count()
-    // the full edge caches only feed the first action and the
-    // contraction projection, both done now
-    eById.unpersist()
-    eByBucket.unpersist()
     var it = 1
     var converged = false
     while (!converged && it < maxIters) {
       // two rounds per convergence action: labels are monotone
       // non-increasing, so a stationary sum across the DOUBLE round
       // implies both sub-rounds were stationary — same fixpoint,
-      // half the driver round-trips (each action is the latency
-      // floor on an iterative job, locally and on a cluster)
+      // half the driver round-trips
       val (next, nextSum) = sumOnce(cRound(cRound(cLabels)))
       converged = nextSum == prevSum
       prevSum = nextSum
-      cLabels.unpersist()
       cLabels = next
       it += 1
     }
-    cById.unpersist()
-    cByBucket.unpersist()
-    if (requireConverged && !converged) {
-      labels.unpersist()
-      cLabels.unpersist()
+    // The first TWO actions run three rounds each (folded init + one
+    // double round, full then contracted); each later loop iteration is
+    // a DOUBLE round.
+    val done = FixpointStats(6 + 2 * (it - 1), converged, edgeRows(),
+      contractedEdgeRows())
+    stats = done
+    System.err.println(
+      s"[clustering] fixpoint after ${done.rounds} rounds " +
+        s"(${2 + it} actions, maxIters=$maxIters, converged=$converged, " +
+        s"edges=${done.edgeRows} contracted=${done.contractedEdgeRows})")
+    if (requireConverged && !converged)
       sys.error(s"label propagation still moving after maxIters=$maxIters " +
         "rounds — refusing to return a non-converged clustering " +
         "(requireConverged=true)")
-    }
     // re-attach the contracted assignment to the full id set: each id's
-    // post-star label maps to its component minimum. Materialized once
-    // (persist or, under CheckpointConf, localCheckpoint — keeping the
-    // returned frame a leaf, the old contract) so the two inputs can be
-    // released immediately; the result cache follows the
-    // release-on-next-call protocol as before.
-    val out = roundMaterialize(labels.join(
+    // post-star label maps to its component minimum; checkpointed so the
+    // returned frame is a leaf
+    labels.join(
       cLabels.select($"id".as("cluster"), $"cluster".as("cmin"))
         .hint("shuffle_hash"), "cluster")
-      .select($"id", $"cmin".as("cluster")))
-    labels.unpersist()
-    cLabels.unpersist()
-    // observability for scale runs (VERDICT r3 #3): how close the
-    // corpus comes to the maxIters valve. The first TWO actions run
-    // three rounds each (folded init + one double round, full then
-    // contracted); each later loop iteration is a DOUBLE round.
-    lastRounds = 6 + 2 * (it - 1)
-    lastConverged = converged
-    System.err.println(
-      s"[clustering] fixpoint after ${6 + 2 * (it - 1)} rounds " +
-        s"(${2 + it} actions, maxIters=$maxIters, converged=$converged, " +
-        s"edges=$lastEdgeRows contracted=$lastContractedEdgeRows)")
-    lastCaches = List(out)
-    out
+      .select($"id", $"cmin".as("cluster"))
+      .localCheckpoint()
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, QueryGroup, Tables}
 import graft.functions.PrestoDatetime
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scalar-function tier — SURVEY.md §2.8.

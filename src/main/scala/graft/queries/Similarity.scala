@@ -4,7 +4,6 @@ import graft.{QueryDef, QueryGroup, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over the `embeddings` table (64-dim float).
   *
@@ -64,11 +63,6 @@ object Similarity extends QueryGroup {
       .withColumn("nrm", expr("vec_norm(v)"))
     df.unionByName(planted)
   }
-
-  private def duckPlanted(n: Int): String =
-    s"""SELECT vec_id + 100000 AS vec_id, label,
-       |  list_transform(v, x -> x + 0.001) AS v
-       |FROM c WHERE vec_id < $n""".stripMargin
 
   // --- banded hyperplane signatures ------------------------------------
 
@@ -227,17 +221,14 @@ object Similarity extends QueryGroup {
     val a0 = assignCells(corpus, c0)
     // c1 is consumed by BOTH the final assignment and every caller's
     // probe ranking (and, in the materialized row, two separate write
-    // actions). r20: materialized as a LAZY localCheckpoint instead
-    // of the r19 persist — the 20-row table is a flat leaf, so no
-    // consumer action re-plans the embedded two-pass Lloyd chain (the
-    // nested-InMemoryRelation replanning cost ProfileFixpoint
-    // measured), and the release-on-next-call swap protocol (ADVICE
-    // r19 #4's race) disappears with the cache entry itself: 20-row
-    // checkpoint blocks are per-invocation scaffolding the harnesses'
-    // dropStorage reclaims. Lazy (eager = false) keeps the persist's
-    // compute-on-first-action semantics, so an action that provably
-    // needs no centroid values still skips the Lloyd chain exactly as
-    // it did in r19 (the sim_ann_recall bench-comparability note).
+    // actions), so it is checkpointed: the 20-row table is a flat leaf
+    // and no consumer re-plans the embedded two-pass Lloyd chain. Its
+    // blocks are per-invocation scaffolding that the harnesses'
+    // storage hygiene reclaims. With eager = false, creating the
+    // checkpoint still runs every shuffle stage of the Lloyd chain
+    // inside the builder (AQE materializes all query stages before it
+    // returns the RDD); only the final stage waits for the first
+    // consuming action, which computes it once for all consumers.
     val c1 = roundedCentroids(a0).localCheckpoint(eager = false)
     val a1 = assignCells(corpus, c1)
     (a1, c1)
@@ -652,10 +643,11 @@ object Similarity extends QueryGroup {
     val assign1 = sub.join(broadcast(seedsArr), Seq("m"))
       .select($"vec_id", $"m", nearest($"cands", $"sv").as("cid"), $"sv")
     // the M·K=32-row codebook feeds the encode pass, the ADC table,
-    // and (in the materialized row) its own write — one LAZY
-    // localCheckpoint so the seed-assignment chain executes once and
-    // every consumer plans against a flat 32-row leaf (r20, the c1
-    // treatment; replaces the r19 persist + release-on-next-call swap)
+    // and (in the materialized row) its own write — one localCheckpoint
+    // so the seed-assignment chain executes once and every consumer
+    // plans against a flat 32-row leaf. As for c1, eager = false still
+    // runs the chain's shuffle stages inside the builder; only the
+    // final aggregate stage waits for the first consuming action.
     val codebook = assign1.groupBy($"m", $"cid")
       .agg(array((0 until Sub).map(i =>
         avg(element_at($"sv", i + 1))): _*).as("cw"))
@@ -818,7 +810,6 @@ object Similarity extends QueryGroup {
     // scan cost scales linearly with the probe count (recall/cost knob).
     "sim_ann_ivf_multiprobe" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
         val corpus = vecs(s, dir)
         multiprobeServe(s, corpus, centroidsOf(corpus))
       },
@@ -1807,45 +1798,32 @@ object Similarity extends QueryGroup {
   private lazy val recallDef: QueryDef = QueryDef(
     (s, dir) => {
       import s.implicits._
-      // exact3 (30 rows) is consumed twice (the hits semi-join and the
+      // exact3 (30 rows) is consumed twice (the hits join and the
       // `possible` scalar) — checkpoint it once like the tiers below.
-      // LAZY (eager = false), deliberately, here and below: a lazy
-      // checkpoint still truncates the plan to a LogicalRDD leaf and
-      // still computes ONCE under any action that materializes it
-      // (both consumers share the same RDD), but it preserves r19's
-      // action semantics — an action that provably needs no tier
-      // values (the bench's count(): the optimizer eliminates the
-      // left joins against unique-keyed aggregates) still skips the
-      // tier work, keeping the bench series comparable across rounds
-      // instead of silently re-defining what count() measures.
+      // Here and below, eager = false truncates the plan to a
+      // LogicalRDD leaf that both consumers share, but it does NOT
+      // defer the work: under AQE, creating the checkpoint runs every
+      // shuffle stage of the plan inside the builder, and only the
+      // final stage waits for the first consuming action. An action
+      // that needs no tier values (count(), whose optimizer removes the
+      // left joins against unique-keyed aggregates) still pays for
+      // those shuffle stages.
       val exact3 = exactTopk(s, dir, 3).select($"q_id", $"vec_id")
         .localCheckpoint(eager = false)
       // Each tier's shortlist is ≤ |Q|·k rows but composes that tier's
-      // FULL serve pipeline; the union of the raw builders was a
-      // ~561-Exchange tree referenced TWICE below (hits + retrieved),
-      // so every tier pipeline was planned into the action twice.
-      // r20: ONE lazy localCheckpoint truncates the union to a
-      // ~330-row LogicalRDD leaf (optimization r20; VERDICT r19 next
-      // #2, guide §3.3 "materialising an intermediate truncates the
-      // plan" / §5), and BOTH per-tier counts now come from a SINGLE
-      // aggregate over the hit-marked shortlists, so the union has
-      // exactly one consumer and is computed exactly once, with the
-      // independent tier legs still running as concurrent stages of
-      // that one action. (Two alternatives were measured and
-      // rejected: checkpointing each tier separately — 11 eager
-      // actions serialize the legs, 11.7 → 14.8 s; and an EAGER union
-      // checkpoint with the old twin aggregates — fastest under the
-      // noop sink, 6.4-7.0 s, but it changes what the bench's count()
-      // action measures: count() eliminates the left joins against
-      // the unique-keyed aggregates and so never ran the tier
-      // pipelines in r19's lazy plan — an eager builder would
-      // re-define that series as an ~8.6 s row. The single-aggregate
-      // lazy shape keeps the real work single-pass AND preserves
-      // count()'s pruning semantics.) Values unchanged: exact3's
-      // (q_id, vec_id) pairs are unique by construction (row_number
-      // enumerates distinct corpus rows per query), so a left join
-      // never duplicates a shortlist row and count(hit) equals the
-      // old semi-join count.
+      // FULL serve pipeline; the union of the raw builders is a
+      // ~561-Exchange tree. ONE localCheckpoint truncates the union to
+      // a ~330-row LogicalRDD leaf, and BOTH per-tier counts come from
+      // a SINGLE aggregate over the hit-marked shortlists, so the union
+      // has exactly one consumer. Creating the checkpoint runs every
+      // tier's shuffle stages inside the builder (eager = false defers
+      // only the union's final stage), with the independent tier legs
+      // running as concurrent stages. (Checkpointing each tier
+      // separately was measured slower: 11 actions serialize the legs,
+      // 11.7 → 14.8 s.) exact3's (q_id, vec_id) pairs are unique by
+      // construction (row_number enumerates distinct corpus rows per
+      // query), so a left join never duplicates a shortlist row and
+      // count(hit) equals a semi-join count.
       val shortlists = recallTiers.map { case (tier, q) =>
         coreDefs(q).build(s, dir)
           .filter($"q_id" < 10 && $"rk" <= 3)
@@ -1899,24 +1877,13 @@ object Similarity extends QueryGroup {
   private[queries] val SemDedupTarget = 50
   private[queries] val SemDedupRounds = 8
 
-  /** Caches held live for the frame returned by the LAST
-    * [[semdedupClusters]] call (which is lazy — unpersisting inside the
-    * call would release them before any action runs). Released at the
-    * start of the next call PER SESSION (r13, VERDICT r12 wrong #3:
-    * keyed by SparkSession so two sessions in one JVM cannot release
-    * each other's caches), mirroring
-    * [[Clustering.propagateToFixpoint]]'s `lastLabels` protocol. */
-  private val lastSemCaches =
-    scala.collection.concurrent.TrieMap
-      .empty[org.apache.spark.sql.SparkSession, List[DataFrame]]
-
   /** Derived-k semantic clusters (r10, VERDICT r9 perf item): start
     * from the IVF cell and recursively bisect every cluster still
     * larger than `target`, so k tracks corpus size and cluster sizes —
     * hence within-cluster pair counts — stay bounded at ANY scale.
-    * Each round is one tiny aggregate (one row per cluster, Spark
-    * auto-broadcasts it back) plus a map — `rounds`·2 linear passes,
-    * no driver-side reads, a static plan. The split predicate compares
+    * Each round is one set of window aggregates over `partition by cl`
+    * plus a map — `rounds` linear passes, no driver-side reads, a
+    * static plan. The split predicate compares
     * each vector's balanced alternating-sign projection `pr` against
     * the cluster mean projection ROUNDED to 6 digits (a stable
     * threshold: engine-side fp summation-order noise in avg() is
@@ -1937,9 +1904,11 @@ object Similarity extends QueryGroup {
     *    (measured 42 s). The window form is a LINEAR chain — one
     *    WindowExec (one hash-partition shuffle on `cl`) per round, no
     *    branching, no persist protocol, and the same per-cluster
-    *    values. Only the final result is persisted, because
-    *    sim_semdedup self-joins it; that cache is released
-    *    lastLabels-style on the NEXT call (see [[lastSemCaches]]).
+    *    values. Only the final result is materialized — an eager
+    *    localCheckpoint, because sim_semdedup self-joins it: both join
+    *    branches then read one flat LogicalRDD leaf instead of each
+    *    re-planning the embedded 8-round window chain. The call keeps
+    *    no state, so concurrent calls are independent.
     *  - A cluster whose members all share one projection value
     *    (round(max(pr),6) = round(min(pr),6) — e.g. >target exact
     *    duplicates, the core semantic-dedup workload) can never split
@@ -1953,9 +1922,7 @@ object Similarity extends QueryGroup {
     *    lands with its source for the first 5 rounds; in the gate
     *    corpus natural `pr` spread means the tie-break never fires. */
   private[graft] def semdedupClusters(all: DataFrame, target: Int,
-      rounds: Int): DataFrame = synchronized {
-    val session = all.sparkSession
-    lastSemCaches.remove(session).getOrElse(Nil).foreach(_.unpersist())
+      rounds: Int): DataFrame = {
     val withPr = all
       .withColumn("pr", expr(
         "aggregate(transform(v, (x, i) -> CASE WHEN i % 2 = 0 THEN x ELSE -x END), " +
@@ -1978,17 +1945,7 @@ object Similarity extends QueryGroup {
           .otherwise(col("cl")))
         .drop("cl_n", "apr", "mxr", "mnr")
     }
-    // r20: eager localCheckpoint instead of persist — sim_semdedup
-    // self-joins this frame, and with persist BOTH join branches
-    // re-planned the embedded 8-round window chain per action (the
-    // nested-InMemoryRelation cost ProfileFixpoint measured); the
-    // checkpoint is a flat leaf. lastSemCaches' release protocol is
-    // kept for the persist-era frames of older sessions (unpersist on
-    // a checkpointed frame is a harmless no-op; blocks are reclaimed
-    // by the harnesses' dropStorage).
-    val cached = out.localCheckpoint()
-    lastSemCaches.put(session, List(cached))
-    cached
+    out.localCheckpoint()
   }
 
   /** DuckDB re-derivation of [[semdedupClusters]] — `rounds` unrolled

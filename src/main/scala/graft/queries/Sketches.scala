@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QueryDef, QueryGroup, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sketch / approximate-aggregate tier — SURVEY.md §2.4 sketch rows +
@@ -24,8 +23,6 @@ import org.apache.spark.sql.functions._
   * operators (max_n, histogram) get value-matched oracles.
   */
 object Sketches extends QueryGroup {
-  private def r4(c: Column): Column = round(c, 4)
-
   override def defs: Map[String, QueryDef] = Map(
     // approx_count_distinct error-bound property per group + globally.
     "sketch_approx_distinct" -> QueryDef(

@@ -583,7 +583,6 @@ object Spatial extends QueryGroup {
     // union/intersection — every value checked against a closed form.
     "fn_geo_tier3" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
         Tables.nation(s, dir).limit(1).select(lit(1).as("one"))
           .withColumn("buf", expr("st_buffer(st_point(3.0, 4.0), 2.0)"))
           .withColumn("hull", expr(

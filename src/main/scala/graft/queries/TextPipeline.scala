@@ -470,7 +470,7 @@ object TextPipeline extends QueryGroup {
     * composite oracles (pipeline_tokenizer_eval) can append it to
     * another chain — CTE names (v, c*, t*, u*, sg*, px*, sc*, bs*)
     * are disjoint from bpeOracle's (v0, s*, p*, b*) by construction. */
-  private def unigramOracleCtes(rounds: Int, tail: String = ""): String = {
+  private def unigramOracleCtes(rounds: Int, tail: String): String = {
     val sb = new StringBuilder
     sb.append(
       s"""v AS (
@@ -617,9 +617,9 @@ object TextPipeline extends QueryGroup {
     * band-bucket collision is only an edge after VERIFICATION:
     *
     *  1. one signature pass computes each doc's 64-row minhash
-    *     signature (persisted — buckets, hub-side and member-side
-    *     verification all read the SAME pass; without the persist the
-    *     corpus would be scanned and re-hashed three times);
+    *     signature; its only consumer is the bucket explode, and one
+    *     bucket window reads both the hub's and the member's signature
+    *     from it, so the corpus is scanned and hashed once;
     *  2. candidates are STAR edges — each bucket member pairs with its
     *     bucket's min-id hub, O(memberships) candidates total, never
     *     the within-bucket pair set (quadratic in bucket size: the
@@ -640,55 +640,54 @@ object TextPipeline extends QueryGroup {
     * misses are the linear candidate set's price) and zero direct
     * sub-0.5 pairs as edges; cluster count rises from 1 (unverified)
     * to 123 at sf0.01 and 1150 at sf0.1. */
-  private def verifiedClusterAssignment(docs: DataFrame): DataFrame =
-    synchronized {
-      val s = docs.sparkSession
-      import s.implicits._
-      // Optimization r19 (guide §2.4 — remove shuffles outright): the
-      // star candidates and their verification are ONE window pass
-      // over the exploded (id, m, bucket) rows instead of the r19
-      // build's groupBy(bucket)+join-back for the hub plus TWO
-      // signature joins against mh for (ma, mb). Both the hub id and
-      // the hub's signature come from first_value over the bucket
-      // window (orderBy id: the frame's first row IS the min-id hub),
-      // so the signatures never rejoin — one exchange by bucket
-      // carries each doc's 512-byte signature exactly once per band
-      // membership, and agreement is counted right there by the
-      // codegen'd arr_eq_count. Selected pairs are identical: the
-      // same (hub=min bucket id, member, agreement ≥ VerifyAgree)
-      // predicate, deduped across buckets after the filter.
-      // r20: the persist here is GONE — in the window form the
-      // signature pass has exactly ONE consumer (the bucket explode
-      // below; hub id and hub signature both come from the window),
-      // and the whole edge pipeline materializes once anyway inside
-      // the fixpoint's eager edge checkpoint. The persist only added
-      // an InMemoryRelation layer to every downstream plan.
-      val mh = Tables.parallelized(docs)
-        .select($"doc_id", PortableLsh.wordBaseHashes($"text").as("x"))
-        .select($"doc_id", PortableLsh.minhashArray($"x").as("m"))
-      val cand = mh.select($"doc_id".as("id"), $"m",
-        explode(PortableLsh.bucketArrayFromSigs($"m",
-          PortableLsh.RowsPerBand)).as("bucket"))
-      val wb = Window.partitionBy($"bucket").orderBy($"id")
-      val ver = cand
-        .withColumn("hub", first($"id").over(wb))
-        .withColumn("hm", first($"m").over(wb))
-        .filter($"id" =!= $"hub")
-        .filter(call_function("arr_eq_count", $"hm", $"m")
-          >= PortableLsh.VerifyAgree)
-        .select($"id", $"hub").distinct()
-      val edges = ver.select($"id", $"hub".cast("string").as("bucket"))
-        .unionByName(docs.select($"doc_id".as("id"),
-          $"doc_id".cast("string").as("bucket")))
-      // requireConverged: the oracle recomputes EXACT components, so a
-      // silently early-cut fixpoint would hash-mismatch downstream —
-      // fail loudly instead (the leakage-split valve discipline). The
-      // star graph can chain deeper than raw bucket stars (hubs link
-      // through shared members), so the valve sits well above the
-      // measured round counts (5/9/13 at 1×/10×/100×).
-      Clustering.propagateToFixpoint(edges, maxIters = 20,
-        requireConverged = true).select($"id", $"cluster")
-    }
+  private def verifiedClusterAssignment(docs: DataFrame): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    // Optimization r19 (guide §2.4 — remove shuffles outright): the
+    // star candidates and their verification are ONE window pass
+    // over the exploded (id, m, bucket) rows instead of the r19
+    // build's groupBy(bucket)+join-back for the hub plus TWO
+    // signature joins against mh for (ma, mb). Both the hub id and
+    // the hub's signature come from first_value over the bucket
+    // window (orderBy id: the frame's first row IS the min-id hub),
+    // so the signatures never rejoin — one exchange by bucket
+    // carries each doc's 512-byte signature exactly once per band
+    // membership, and agreement is counted right there by the
+    // codegen'd arr_eq_count. Selected pairs are identical: the
+    // same (hub=min bucket id, member, agreement ≥ VerifyAgree)
+    // predicate, deduped across buckets after the filter.
+    // r20: the persist here is GONE — in the window form the
+    // signature pass has exactly ONE consumer (the bucket explode
+    // below; hub id and hub signature both come from the window),
+    // and the whole edge pipeline materializes once anyway inside
+    // the fixpoint's eager edge checkpoint. The persist only added
+    // an InMemoryRelation layer to every downstream plan.
+    val mh = Tables.parallelized(docs)
+      .select($"doc_id", PortableLsh.wordBaseHashes($"text").as("x"))
+      .select($"doc_id", PortableLsh.minhashArray($"x").as("m"))
+    val cand = mh.select($"doc_id".as("id"), $"m",
+      explode(PortableLsh.bucketArrayFromSigs($"m",
+        PortableLsh.RowsPerBand)).as("bucket"))
+    val wb = Window.partitionBy($"bucket").orderBy($"id")
+    val ver = cand
+      .withColumn("hub", first($"id").over(wb))
+      .withColumn("hm", first($"m").over(wb))
+      .filter($"id" =!= $"hub")
+      .filter(call_function("arr_eq_count", $"hm", $"m")
+        >= PortableLsh.VerifyAgree)
+      .select($"id", $"hub").distinct()
+    val edges = ver.select($"id", $"hub".cast("string").as("bucket"))
+      .unionByName(docs.select($"doc_id".as("id"),
+        $"doc_id".cast("string").as("bucket")))
+    // requireConverged: the oracle recomputes EXACT components, so a
+    // silently early-cut fixpoint would hash-mismatch downstream —
+    // fail loudly instead (the leakage-split valve discipline). The
+    // star graph can chain deeper than raw bucket stars (hubs link
+    // through shared members), so the valve sits well above the
+    // measured round counts (5/9/13 at 1×/10×/100×).
+    Clustering.propagateToFixpoint(edges, maxIters = 20,
+      requireConverged = true).select($"id", $"cluster")
+  }
 
   /** Warehouse prefix of the standing near-dup asset for `dir`. */
   private def neardupAssetPrefix(s: SparkSession, dir: String): String =
@@ -1906,11 +1905,11 @@ object TextPipeline extends QueryGroup {
         val train = toksDf.filter($"doc_id" % 2 === 0)
         val tri = triOf(train).groupBy($"w1", $"w2", $"w3")
           .agg(count(lit(1)).as("ct"))
-        // LAZY checkpoints (the sim_ann_recall note): each model table
-        // is still computed once for its two broadcast consumers, but
-        // an action that provably needs no model values (count()
-        // eliminates the left joins against these unique-keyed
-        // aggregates) still skips the model builds, as it did in r19.
+        // checkpointed model tables: each is computed once for its two
+        // broadcast consumers. eager = false does not defer the model
+        // builds — under AQE, creating each checkpoint runs its shuffle
+        // stages inside the builder, and only the final aggregate stage
+        // waits for the first consuming action.
         val bi = train.filter(size($"toks") >= 2)
           .select(explode(expr(
             "transform(slice(toks, 1, size(toks) - 1), " +

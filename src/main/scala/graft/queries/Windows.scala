@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, QueryGroup, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
@@ -124,7 +122,6 @@ object MemoryFilterEval {
       case (x: String, y: String) => x.compareTo(y)
       case (x: java.sql.Date, y: java.sql.Date) => x.compareTo(y)
       case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
       case (x: Boolean, y: Boolean) => x.compareTo(y)
       case _ => throw new IllegalArgumentException(
         s"graft_mem delete: cannot compare ${a.getClass} with ${b.getClass}")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derive an sf1-equivalent testdata directory from the driver's sf0.1
@@ -55,7 +55,7 @@ object DeriveSf1 {
       * boundaries and flipped the 4th decimal between Spark and DuckDB.
       */
     def replicate(name: String, keyCols: Seq[String], parts: Int,
-        perturbCols: Map[String, Double] = Map.empty): Unit = {
+        perturbCols: Map[String, Double]): Unit = {
       val src = spark.read.parquet(s"$srcDir/$name.parquet")
       val withKeys = keyCols.foldLeft(src.crossJoin(reps)) { (df, k) =>
         df.withColumn(k, col(k) + $"rep" * Off)

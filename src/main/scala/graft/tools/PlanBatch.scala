@@ -19,22 +19,11 @@ object PlanBatch {
     val names = args.drop(3)
     val spark = graft.GraftSession.build("plan-batch")
     Files.createDirectories(Paths.get(outDir))
-    // the bench's load canary (fixed-cost codegen kernel): lets
-    // isolated runs on a noisy sandbox be normalized like BENCH_NOTES
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 134217728L, 1L, 32)
-        .selectExpr("bit_xor(xxhash64(id)) AS h").head()
-      (System.nanoTime() - t0) / 1e9
-    }
-    canaryOnce()
-    val canary = (1 to 3).map(_ => canaryOnce()).min
+    // the bench's load canary: lets isolated runs on a noisy sandbox be
+    // normalized like BENCH_NOTES
+    graft.Harness.canaryOnce(spark)
+    val canary = (1 to 3).map(_ => graft.Harness.canaryOnce(spark)).min
     System.err.println(f"[planbatch] canary min $canary%.3fs")
-    def dropStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       val plan = fn(spark, sfDir).queryExecution.explainString(
@@ -54,13 +43,13 @@ object PlanBatch {
           warm.queryExecution.executedPlan.toString.getBytes("UTF-8"))
       } catch { case e: Throwable =>
         System.err.println(s"[planbatch] $name FAILED: ${e.getMessage}") }
-      dropStorage()
+      graft.Harness.dropStorage(spark)
       val ts = (1 to 3).map { i =>
         spark.sparkContext.setJobDescription(s"$name pass $i")
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val d = (System.nanoTime() - t0) / 1e9
-        dropStorage()
+        graft.Harness.dropStorage(spark)
         d
       }
       System.err.println(

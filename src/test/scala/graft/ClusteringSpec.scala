@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Clustering
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -29,6 +28,12 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
     val fixed = Clustering.propagateToFixpoint(edges)
       .orderBy($"id").as[(Long, Long)].collect()
     fixed shouldBe Array((1L, 1L), (2L, 1L), (3L, 3L), (7L, 7L), (8L, 7L))
+    // 5 input edges; the contracted cluster graph keeps one edge per
+    // (cluster, bucket): (1,a), (7,z), (3,solo)
+    val stats = Clustering.lastStats
+    stats.edgeRows shouldBe 5L
+    stats.contractedEdgeRows shouldBe 3L
+    stats.converged shouldBe true
   }
 
   test("propagation round is hash-shuffle shaped — no quadratic operator") {
@@ -51,23 +56,18 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("checkpointed rounds truncate lineage and leave labels unchanged") {
-    // r16 (VERDICT r15 next #7): with the conf on, each round
-    // localCheckpoints — the returned frame's plan is a leaf scan of
-    // checkpointed blocks, never a join chain back through rounds
-    // 1..r-1 — and the fixpoint labels are bit-identical to the
-    // persist() path
+    // every materialization is an eager localCheckpoint: the returned
+    // frame's plan is a leaf scan of checkpointed blocks, never a join
+    // chain back through rounds 1..r-1, and the labels are the path's
+    // component minimum
     import spark.implicits._
     val edges = (1 to 5).flatMap(i =>
       Seq((i.toLong, s"e$i"), ((i + 1).toLong, s"e$i"))).toDF("id", "bucket")
-    val plain = Clustering.propagateToFixpoint(edges)
-      .orderBy($"id").as[(Long, Long)].collect()
-    spark.conf.set(Clustering.CheckpointConf, "true")
-    try {
-      val ckpt = Clustering.propagateToFixpoint(edges)
-      ckpt.orderBy($"id").as[(Long, Long)].collect() shouldBe plain
-      val logical = ckpt.queryExecution.logical.toString
-      logical should not include "Join"
-      logical should include("LogicalRDD")
-    } finally spark.conf.unset(Clustering.CheckpointConf)
+    val fixed = Clustering.propagateToFixpoint(edges)
+    fixed.orderBy($"id").as[(Long, Long)].collect() shouldBe
+      (1 to 6).map(i => (i.toLong, 1L)).toArray
+    val logical = fixed.queryExecution.logical.toString
+    logical should not include "Join"
+    logical should include("LogicalRDD")
   }
 }

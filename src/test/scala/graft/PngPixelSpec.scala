@@ -97,7 +97,7 @@ class PngPixelSpec extends AnyFunSuite with SparkFixture with Matchers {
       (seed * 13 + y * 97 + i * 41 + (i * i) % 151) % 256)
 
   private def sums(px: Array[Array[Int]]): (Long, Long, Long) = {
-    var s = Array(0L, 0L, 0L)
+    val s = Array(0L, 0L, 0L)
     for (row <- px; i <- row.indices) s(i % 3) += row(i)
     (s(0), s(1), s(2))
   }
@@ -145,7 +145,7 @@ class PngPixelSpec extends AnyFunSuite with SparkFixture with Matchers {
     val px = Array.tabulate(h, w * 4)((y, i) =>
       (3 + y * 59 + i * 37 + (i * i) % 97) % 256)
     val row = decode(encodePng(w, h, px, y => y % 5, colorType = 6))
-    var s = Array(0L, 0L, 0L, 0L)
+    val s = Array(0L, 0L, 0L, 0L)
     for (r <- px; i <- r.indices) s(i % 4) += r(i)
     (row.getInt(0), row.getInt(1), row.getLong(2)) shouldBe ((w, h, w.toLong * h))
     (row.getLong(3), row.getLong(4), row.getLong(5)) shouldBe ((s(0), s(1), s(2)))

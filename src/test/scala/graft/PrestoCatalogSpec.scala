@@ -102,7 +102,6 @@ class PrestoCatalogSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("a realistic Presto-dialect query runs unchanged") {
-    import spark.implicits._
     Tables.registerAll(spark, sfDir)
     // mixes Presto spellings end to end: strpos, date_parse, try,
     // approx_distinct, arbitrary, split_to_map inputs, checksum
