@@ -27,17 +27,17 @@ object GraftSession {
       // AQE: runtime shuffle-partition coalescing + skew-join splitting,
       // the scale path for 100 TB joins (SURVEY.md §4.1).
       .config("spark.sql.adaptive.enabled", "true")
-      // r20 (VERDICT r19 next #5 + ADVICE r19 #2): the r19 session-wide
-      // preferSortMergeJoin=false is RETRACTED. AQE FINAL executed
-      // plans captured for tpch_q9 / tpcds_q72 / tpcds_q78
-      // (plans/r20/*_after_final.txt) show zero ShuffledHashJoin from
-      // the static flag — every SHJ on the query surface comes from an
-      // explicit SHUFFLE_HASH hint (the fixpoint joins), which works
-      // regardless of the preference. The flag's only remaining effect
-      // was risk: ShuffledHashJoinExec's build map cannot spill, and a
-      // global planner preference trusts size ESTIMATES that go wrong
-      // after filters/aggregates. The runtime rewrite below is kept —
-      // it is bounded by ACTUAL post-shuffle partition sizes.
+      // Static join selection keeps Spark's sort-merge preference (no
+      // session-wide preferSortMergeJoin=false): ShuffledHashJoinExec's
+      // build map cannot spill, and a static preference would trust size
+      // ESTIMATES that go wrong after filters and aggregates. AQE picks
+      // hash joins from ACTUAL sizes instead: small sides become
+      // broadcasts, and a sort-merge join whose post-shuffle partitions
+      // all fit under this threshold runs as a shuffled hash join. The
+      // AQE-final plans in plans/r21/ (sf0.1) show both: tpch_q9 runs
+      // five broadcast joins, tpcds_q72's one sort-merge join runs as a
+      // ShuffledHashJoin, and tpcds_q78's three run as broadcasts. The
+      // explicit SHUFFLE_HASH hints (the fixpoint joins) apply either way.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         "64MB")
       // map_agg/map_union keep one value per duplicate key (Presto

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Storage hygiene and load calibration shared by the timing harnesses
-  * ([[Bench]], [[ScaleProbe]], [[tools.PlanBatch]]). */
+  * ([[Bench]], [[ScaleProbe]], [[tools.Profile]]). */
 object Harness {
 
   /** Drops every CacheManager entry and unpersists every persistent RDD

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
-
 import graft.queries.{Clustering, FixpointStats}
 
 /** Scale-out probe (VERDICT r3 next-round #3): the driver testdata
@@ -118,31 +116,14 @@ object ScaleProbe {
     val scaleDir = if (args.length > 1) args(1) else "scratch/scale10"
     val replicas = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.build("graft-scale-probe")
-    import spark.implicits._
 
     val docsPath = s"$scaleDir/documents.parquet"
     if (!new java.io.File(docsPath).exists()) {
       System.err.println(s"[scale-probe] building $replicas x scale-up under $scaleDir")
-      val reps = spark.range(replicas).select($"id".as("rep"))
-      Tables.documents(spark, srcDir).crossJoin(reps)
-        .select(
-          ($"doc_id" + $"rep" * 10000000L).as("doc_id"),
-          when($"rep" === 0, $"text")
-            .when(pmod($"doc_id", lit(3)) === 0,
-              concat($"text", lit(" rep"), $"rep"))
-            .otherwise($"text").as("text"),
-          $"lang", $"source", $"n_chars")
-        .repartition(64)
-        .write.mode("overwrite").parquet(docsPath)
-      Tables.embeddings(spark, srcDir).crossJoin(reps)
-        .select(
-          ($"vec_id" + $"rep" * 10000000L).as("vec_id"),
-          expr("""cast(transform(embedding, (x, i) ->
-            |x * (1.0d + 0.0001d * pmod(vec_id + i + rep, 7) / 7.0d))
-            |as array<float>)""".stripMargin).as("embedding"),
-          $"label")
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$scaleDir/embeddings.parquet")
+      val (docs, emb) = tools.DeriveSf1.corpusReplicas(spark, srcDir, replicas)
+      docs.repartition(64).write.mode("overwrite").parquet(docsPath)
+      emb.repartition(32).write.mode("overwrite")
+        .parquet(s"$scaleDir/embeddings.parquet")
     }
 
     def probeSet(names: Seq[String])(dir: String): Seq[(String, Double, Long, Option[FixpointStats])] =

@@ -124,7 +124,9 @@ object Tables {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val conf = spark.sessionState.conf
-    val leaves = df.queryExecution.logical.collectLeaves()
+    // the ANALYZED plan: a bare Tables.x frame's raw logical plan is an
+    // unresolved view reference with no file index behind it
+    val leaves = df.queryExecution.analyzed.collectLeaves()
     val fileRelations = leaves.collect {
       case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
         l.relation.asInstanceOf[HadoopFsRelation]

@@ -24,11 +24,7 @@ object ExplainAnalyze {
     * index into the final executed plan.
     */
   def analyze(spark: SparkSession, df: DataFrame): DataFrame = {
-    // drive THIS DataFrame's own physical plan (df.count() would build
-    // and execute a separate count plan, leaving these metrics at 0)
-    df.queryExecution.toRdd.foreach(_ => ())
-    val plan = df.queryExecution.executedPlan
-    val rows = walk(plan).zipWithIndex.flatMap { case (p, i) =>
+    val rows = walk(execute(df)).zipWithIndex.flatMap { case (p, i) =>
       p.metrics.toSeq.sortBy(_._1).map { case (name, m) =>
         Row(i, p.nodeName, name, m.value)
       }
@@ -40,6 +36,15 @@ object ExplainAnalyze {
         StructField("operator", StringType, nullable = false),
         StructField("metric", StringType, nullable = false),
         StructField("value", LongType, nullable = false))))
+  }
+
+  /** Executes `df`'s own physical plan, consuming every row, and
+    * returns that plan — under AQE, the final plan its stages ran as.
+    * `df.count()` or a write would build and execute a separate plan,
+    * leaving this one unexecuted (its metrics at 0, `isFinalPlan=false`). */
+  def execute(df: DataFrame): SparkPlan = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.executedPlan
   }
 
   /** Pre-order walk that crosses the two boundaries `collect` stops

@@ -39,21 +39,36 @@ final case class FixpointStats(rounds: Int, converged: Boolean,
   */
 object Clustering {
 
-  /** One propagation round: label(id) ← min over id's buckets of the
-    * bucket's member-label minimum. Monotone non-increasing per id. */
-  def propagateRound(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val bucketMin = edges.join(labels, "id")
-      .groupBy("bucket").agg(min("cluster").as("bmin"))
-    edges.join(bucketMin, "bucket")
+  /** One propagation round over an (id, bucket) edge table:
+    * label(id) ← min over id's buckets of the bucket's member-label
+    * minimum. Monotone non-increasing per id. With `labels = None` it is
+    * the first round from cluster(id) = id, folded: the bucket minimum
+    * is then min(id) per bucket, so no labels join is needed.
+    *
+    * The SHUFFLE_HASH hints pin the join strategy: without them the
+    * planner broadcasts the (locally tiny) label frame every round — a
+    * per-round driver collect + broadcast build that is pure latency
+    * here and a non-starter at cluster scale where labels are
+    * corpus-sized. */
+  private def propagateRound(edges: DataFrame,
+      labels: Option[DataFrame]): DataFrame = {
+    val memberLabels = labels.fold(
+      edges.select(col("bucket"), col("id").as("cluster")))(
+      l => edges.join(l.hint("shuffle_hash"), "id"))
+    val bucketMin = memberLabels.groupBy("bucket")
+      .agg(min("cluster").as("bmin"))
+    edges.join(bucketMin.hint("shuffle_hash"), "bucket")
       .groupBy("id").agg(min("bmin").as("cluster"))
   }
 
-  /** Lazily unrolled n-round propagation — pure plan, no actions; used
-    * by plan-shape tests to assert the per-round shuffle shape. */
-  def propagateRounds(edges: DataFrame, rounds: Int): DataFrame = {
-    val init = edges.select(col("id")).distinct()
-      .withColumn("cluster", col("id"))
-    (1 to rounds).foldLeft(init)((l, _) => propagateRound(edges, l))
+  /** `rounds` propagation rounds over `edges`, lazily unrolled (pure
+    * plan, no actions), from `labels` or, when None, from
+    * cluster(id) = id. The fixpoint materializes these; plan-shape tests
+    * assert the per-round shuffle shape on them directly. */
+  def propagateRounds(edges: DataFrame, rounds: Int,
+      labels: Option[DataFrame] = None): DataFrame = {
+    require(rounds > 0, s"rounds must be positive, got $rounds")
+    (1 to rounds).foldLeft(labels)((l, _) => Some(propagateRound(edges, l))).get
   }
 
   @volatile private var stats = FixpointStats(0, converged = false, 0L, 0L)
@@ -88,26 +103,13 @@ object Clustering {
       requireConverged: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // The edge table is repartitioned on each of its two join keys and
-    // checkpointed once per key. Under AQE the checkpoint's LogicalRDD
-    // does not carry that hash partitioning (the adaptive plan reports
-    // UnknownPartitioning, wherever the observe sits), so each round's
-    // joins still exchange the edge side. The SHUFFLE_HASH hint on the
-    // label side pins the strategy: without it the planner broadcasts
-    // the (locally tiny) label frame every round — a per-round driver
-    // collect + broadcast build that is pure latency here and a
-    // non-starter at cluster scale where labels are corpus-sized.
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // Each edge table (the input, then the contracted cluster graph) is
+    // checkpointed once, as it arrives. Under AQE a checkpoint's
+    // LogicalRDD reports UnknownPartitioning, so each round's joins
+    // exchange the edge side whatever layout the checkpoint holds.
     val (edgesObs, edgeRows) =
       observing(edges.select($"id", $"bucket"), count(lit(1)))
-    val eById = edgesObs.repartition(nParts, $"id").localCheckpoint()
-    val eByBucket = eById.repartition(nParts, $"bucket").localCheckpoint()
-    def round(labels: DataFrame): DataFrame = {
-      val bucketMin = eById.join(labels.hint("shuffle_hash"), "id")
-        .groupBy("bucket").agg(min("cluster").as("bmin"))
-      eByBucket.join(bucketMin.hint("shuffle_hash"), "bucket")
-        .groupBy("id").agg(min("bmin").as("cluster"))
-    }
+    val e = edgesObs.localCheckpoint()
     // the convergence sum rides the materializing action as an observed
     // metric — one job materializes the round AND yields the sum
     def sumOnce(df: DataFrame): (DataFrame, Long) = {
@@ -115,17 +117,12 @@ object Clustering {
       val m = obs.localCheckpoint()
       (m, s())
     }
-    // Round 1 is folded into initialization: with cluster(id)=id the
-    // bucket minimum is just min(id) per bucket — no labels join yet.
-    // The FIRST action runs three rounds (the folded init + one double
-    // round): measured components converge in 5-7 rounds, so a deeper
-    // first plan saves one whole action — the per-action latency (stage
-    // scheduling + checkpoint + convergence check) is the fixpoint's
-    // floor, locally and on a cluster.
-    val (labels, _) = sumOnce(round(round(eByBucket.join(
-        eByBucket.groupBy($"bucket").agg(min($"id").as("bmin"))
-          .hint("shuffle_hash"), "bucket")
-      .groupBy($"id").agg(min($"bmin").as("cluster")))))
+    // The FIRST action runs three rounds (the folded first round + one
+    // double round): measured components converge in 5-7 rounds, so a
+    // deeper first plan saves one whole action — the per-action latency
+    // (stage scheduling + checkpoint + convergence check) is the
+    // fixpoint's floor, locally and on a cluster.
+    val (labels, _) = sumOnce(propagateRounds(e, 3))
     // Label-graph contraction: the first action collapses every star,
     // so the remaining rounds only need the CLUSTER graph — each edge
     // projected to (cluster(id), bucket) and deduped. Components are
@@ -138,22 +135,12 @@ object Clustering {
     // ~|components| rows instead of the corpus (contractedEdgeRows vs
     // edgeRows in [[FixpointStats]] records the ratio).
     val (cEdges, contractedEdgeRows) = observing(
-      eById.join(labels.hint("shuffle_hash"), "id")
+      e.join(labels.hint("shuffle_hash"), "id")
         .select($"cluster".as("id"), $"bucket").distinct(),
       count(lit(1)))
-    val cById = cEdges.repartition(nParts, $"id").localCheckpoint()
-    val cByBucket = cById.repartition(nParts, $"bucket").localCheckpoint()
-    def cRound(ls: DataFrame): DataFrame = {
-      val bucketMin = cById.join(ls.hint("shuffle_hash"), "id")
-        .groupBy("bucket").agg(min("cluster").as("bmin"))
-      cByBucket.join(bucketMin.hint("shuffle_hash"), "bucket")
-        .groupBy("id").agg(min("bmin").as("cluster"))
-    }
-    // contracted folded init + double round, as above
-    var (cLabels, prevSum) = sumOnce(cRound(cRound(cByBucket.join(
-        cByBucket.groupBy($"bucket").agg(min($"id").as("bmin"))
-          .hint("shuffle_hash"), "bucket")
-      .groupBy($"id").agg(min($"bmin").as("cluster")))))
+    val c = cEdges.localCheckpoint()
+    // contracted first action: three rounds, as above
+    var (cLabels, prevSum) = sumOnce(propagateRounds(c, 3))
     var it = 1
     var converged = false
     while (!converged && it < maxIters) {
@@ -161,15 +148,15 @@ object Clustering {
       // non-increasing, so a stationary sum across the DOUBLE round
       // implies both sub-rounds were stationary — same fixpoint,
       // half the driver round-trips
-      val (next, nextSum) = sumOnce(cRound(cRound(cLabels)))
+      val (next, nextSum) = sumOnce(propagateRounds(c, 2, Some(cLabels)))
       converged = nextSum == prevSum
       prevSum = nextSum
       cLabels = next
       it += 1
     }
-    // The first TWO actions run three rounds each (folded init + one
-    // double round, full then contracted); each later loop iteration is
-    // a DOUBLE round.
+    // The first TWO actions run three rounds each (folded first round +
+    // one double round, full then contracted); each later loop
+    // iteration is a DOUBLE round.
     val done = FixpointStats(6 + 2 * (it - 1), converged, edgeRows(),
       contractedEdgeRows())
     stats = done

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Derive an sf1-equivalent testdata directory from the driver's sf0.1
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * invalidate both the correctness oracle and any timing. This mirrors
   * how TPC-H itself scales (per-SF linear table growth, fixed
   * region/nation). nation/region stay verbatim; documents/embeddings
-  * get the ScaleProbe-style deterministic perturbation so near-dup
-  * clusters deepen realistically.
+  * are [[corpusReplicas]], whose deterministic perturbation deepens
+  * near-dup clusters realistically.
   *
   * The derived directory is oracle-compatible: DuckDB runs the same
   * SQL over the same parquet, so the full correctness gate applies
@@ -25,11 +25,40 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.DeriveSf1 [srcDir] [outDir] [replicas]
   */
 object DeriveSf1 {
+  /** Replica r's keys are the source keys + r·KeyOffset. */
+  private val KeyOffset = 10000000L
+
+  /** The `replicas`× scale-up of the documents and embeddings corpora,
+    * shared by this tool and [[graft.ScaleProbe]]; callers choose their
+    * own write partitioning. Ids are offset by rep·KeyOffset and content
+    * is perturbed deterministically: a trailing replica-tagged token on
+    * ~1/3 of replica docs, a ≤0.01% multiplicative jitter on embedding
+    * coordinates. Replicas of one document are near-dups of each other,
+    * so every near-dup cluster grows ~replicas× and min-label chains
+    * deepen. */
+  def corpusReplicas(spark: SparkSession, srcDir: String,
+      replicas: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val reps = spark.range(replicas).select($"id".as("rep"))
+    val docs = graft.Tables.documents(spark, srcDir).crossJoin(reps).select(
+      ($"doc_id" + $"rep" * KeyOffset).as("doc_id"),
+      when($"rep" === 0, $"text")
+        .when(pmod($"doc_id", lit(3)) === 0, concat($"text", lit(" rep"), $"rep"))
+        .otherwise($"text").as("text"),
+      $"lang", $"source", $"n_chars")
+    val emb = graft.Tables.embeddings(spark, srcDir).crossJoin(reps).select(
+      ($"vec_id" + $"rep" * KeyOffset).as("vec_id"),
+      expr("""cast(transform(embedding, (x, i) ->
+        |x * (1.0d + 0.0001d * pmod(vec_id + i + rep, 7) / 7.0d))
+        |as array<float>)""".stripMargin).as("embedding"),
+      $"label")
+    (docs, emb)
+  }
+
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "scratch/sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val Off = 10000000L
     val spark = graft.GraftSession.build("graft-derive-sf1")
     import spark.implicits._
 
@@ -58,7 +87,7 @@ object DeriveSf1 {
         perturbCols: Map[String, Double]): Unit = {
       val src = spark.read.parquet(s"$srcDir/$name.parquet")
       val withKeys = keyCols.foldLeft(src.crossJoin(reps)) { (df, k) =>
-        df.withColumn(k, col(k) + $"rep" * Off)
+        df.withColumn(k, col(k) + $"rep" * KeyOffset)
       }
       val out = perturbCols.foldLeft(withKeys) { case (df, (c, eps)) =>
         df.withColumn(c, col(c) + $"rep" * eps)
@@ -83,22 +112,9 @@ object DeriveSf1 {
     replicate("events", Seq("event_id", "user_id"), 16,
       Map("value" -> 1e-9))
 
-    // documents/embeddings: ScaleProbe-style near-dup-aware scale-up
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
-    write(docs.crossJoin(reps).select(
-      ($"doc_id" + $"rep" * Off).as("doc_id"),
-      when($"rep" === 0, $"text")
-        .when(pmod($"doc_id", lit(3)) === 0, concat($"text", lit(" rep"), $"rep"))
-        .otherwise($"text").as("text"),
-      $"lang", $"source", $"n_chars"), "documents", 32)
-
-    val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
-    write(emb.crossJoin(reps).select(
-      ($"vec_id" + $"rep" * Off).as("vec_id"),
-      expr("""cast(transform(embedding, (x, i) ->
-        |x * (1.0d + 0.0001d * pmod(vec_id + i + rep, 7) / 7.0d))
-        |as array<float>)""".stripMargin).as("embedding"),
-      $"label"), "embeddings", 16)
+    val (docs, emb) = corpusReplicas(spark, srcDir, replicas)
+    write(docs, "documents", 32)
+    write(emb, "embeddings", 16)
 
     spark.stop()
   }

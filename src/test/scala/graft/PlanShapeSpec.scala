@@ -881,4 +881,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
     plan.sliding("BroadcastHashJoin".length)
       .count(_ == "BroadcastHashJoin") should be >= 3
   }
+
+  test("filters and column pruning pass beneath Tables.parallelized's repartition") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    Tables.parallelized(Tables.lineitem(spark, sfDir))
+      .createOrReplaceTempView("lineitem_parallelized")
+    val plan = spark.sql(
+      "SELECT sum(l_extendedprice * l_discount) FROM lineitem_parallelized " +
+        "WHERE l_shipdate >= DATE '1994-01-01' AND l_quantity < 24")
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    // the round-robin repartition sits between the filter and the scan,
+    // so the pushdown below is asserted across it
+    plan.toString should include("RoundRobinPartitioning")
+    // read from the scan node itself: the plan string abbreviates long
+    // metadata values
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+    val pushed = scan.metadata("PushedFilters")
+    pushed should include("GreaterThanOrEqual(l_shipdate")
+    pushed should include("LessThan(l_quantity")
+    scan.requiredSchema.fieldNames.toSet shouldBe
+      Set("l_quantity", "l_extendedprice", "l_discount", "l_shipdate")
+  }
 }

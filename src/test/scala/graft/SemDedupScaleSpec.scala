@@ -10,36 +10,27 @@ import org.scalatest.matchers.should.Matchers
   * fixed-label version's pair count grew as N²/k; the committed
   * artifact must bound per-cluster pair work at any corpus size).
   * Exercises [[Similarity.semdedupClusters]] on sf0.1's embeddings and
-  * on an sf1-EQUIVALENT 10× key-offset replication (the same transform
-  * DeriveSf1 ships), asserting cluster sizes — hence pair counts —
-  * stay bounded while jitter-planted near-dup pairs stay co-clustered.
+  * on an sf1-EQUIVALENT 10× key-offset replication (the transform
+  * DeriveSf1 and ScaleProbe ship), asserting cluster sizes — hence pair
+  * counts — stay bounded while jitter-planted near-dup pairs stay
+  * co-clustered.
   */
 class SemDedupScaleSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   private val Target = 50
   private val Rounds = 8
 
-  private def emb(dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("label"),
+  private def vectors(raw: DataFrame): DataFrame =
+    raw.select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", expr("vec_norm(v)"))
 
-  /** DeriveSf1's embeddings scale-up, inline (10 replicas, key offset,
-    * deterministic per-element perturbation). */
-  private def sf1Like: DataFrame = {
-    import spark.implicits._
-    val reps = spark.range(10).select($"id".as("rep"))
-    spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-      .crossJoin(reps)
-      .select(($"vec_id" + $"rep" * 10000000L).as("vec_id"),
-        expr("""cast(transform(embedding, (x, i) ->
-          |x * (1.0d + 0.0001d * pmod(vec_id + i + rep, 7) / 7.0d))
-          |as array<float>)""".stripMargin).as("embedding"),
-        $"label")
-      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-      .withColumn("nrm", expr("vec_norm(v)"))
-  }
+  private def emb(dir: String): DataFrame =
+    vectors(spark.read.parquet(s"$dir/embeddings.parquet"))
+
+  /** The shipped 10× embeddings scale-up ([[tools.DeriveSf1.corpusReplicas]]). */
+  private def sf1Like: DataFrame = vectors(
+    tools.DeriveSf1.corpusReplicas(spark, "/root/testdata/sf0.1", 10)._2)
 
   private def planted(df: DataFrame, n: Int): DataFrame = {
     val p = df.filter(col("vec_id") < n)
